@@ -231,20 +231,15 @@ def main() -> None:
     # Distributed-path lane (r14 verdict item 3): at sf0.1 every
     # graph/orderstats/ANN/BPE input fits its driver-route budget, so
     # the primary bench times numpy on the driver, not the Spark plans
-    # that run at 100 TB. SPARK_GRAFT_BENCH_LANE=dist zeroes every
-    # route budget so the distributed loops stay regression-tracked;
-    # the record lands in BENCH_LOCAL_dist_c{N}.json and NEVER touches
-    # the primary lane's files. The driver always runs the primary
-    # lane (it does not set this env), so its numbers are unaffected.
+    # that run at 100 TB. SPARK_GRAFT_BENCH_LANE=dist sets the one
+    # route switch (operators.route, SPARK_GRAFT_DRIVER_ROUTES=0), which
+    # zeroes every route budget, so the distributed loops stay
+    # regression-tracked; the record lands in BENCH_LOCAL_dist_c{N}.json
+    # and NEVER touches the primary lane's files. A run without this
+    # env is the primary lane, so its numbers are unaffected.
     lane = os.environ.get("SPARK_GRAFT_BENCH_LANE", "")
     if lane == "dist":
-        for k in (
-            "SPARK_GRAFT_GRAPH_DRIVER_EDGES",
-            "SPARK_GRAFT_ORDERSTATS_DRIVER_ROWS",
-            "SPARK_GRAFT_ANN_DRIVER_ROWS",
-            "SPARK_GRAFT_BPE_DRIVER_VOCAB",
-        ):
-            os.environ.setdefault(k, "0")
+        os.environ["SPARK_GRAFT_DRIVER_ROUTES"] = "0"
 
     import __spark_entry__ as ent
     from databridge_etl_tools_spark.session import get_session

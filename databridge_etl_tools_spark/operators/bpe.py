@@ -55,6 +55,7 @@ from collections.abc import Iterator
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import route as RT
 from .materialize import materialize
 from .textstats import tokens
 from .util import maybe_broadcast
@@ -278,30 +279,6 @@ def _fit_words_py(
     return merges, units
 
 
-#: vocabulary budget for the driver-side BPE rounds: a (word, freq)
-#: table at or under this row count is collected and the merge loop
-#: runs as in-memory delta updates (pair types are character-/subword-
-#: bigram-bounded, orders of magnitude below the vocabulary); above
-#: it the distributed per-round loop is the honest path — at 100 TB
-#: a Heaps-law vocabulary is 10^8+ rows and must never land on the
-#: driver. Same size-aware routing discipline as util.maybe_broadcast
-#: and the |sources|-bounded pagerank_py walk.
-DRIVER_VOCAB_BUDGET = 1_000_000
-
-
-def _driver_vocab_budget() -> int:
-    """Resolve the routing budget at call time so the distributed
-    bench lane (``SPARK_GRAFT_BPE_DRIVER_VOCAB=0``) and the parity
-    tests can toggle it per process; unset keeps the module default."""
-    import os
-
-    return int(
-        os.environ.get(
-            "SPARK_GRAFT_BPE_DRIVER_VOCAB", str(DRIVER_VOCAB_BUDGET)
-        )
-    )
-
-
 def bpe_fit_words(
     docs: DataFrame,
     *,
@@ -343,9 +320,12 @@ def bpe_fit_words(
     # (bit-identical: pinned against the distributed loop in
     # tests/test_bpe.py) and rebuild the finished word table; past
     # the budget the distributed per-round loop below is the honest
-    # path. One bounded count probe decides.
+    # path. One bounded count probe decides (the ``bpe`` budget in
+    # ``operators.route``): vocabulary rows are short strings, far
+    # below Spark's result-size cap, so a Row collect behind the
+    # count is safe.
     if driver_vocab_budget is None:
-        driver_vocab_budget = _driver_vocab_budget()
+        driver_vocab_budget = RT.budget("bpe")
     if (
         driver_vocab_budget > 0
         and words.agg(F.count(F.lit(1))).collect()[0][0]

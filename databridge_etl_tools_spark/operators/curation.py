@@ -262,9 +262,10 @@ def curation_finalize(
         .drop("pred_lang")
     )
     # bounded driver-side integer walk — see corpus_curation_v8.
-    # Nodes are the raw source STRINGS (pagerank_py keys by any
-    # hashable; rank values depend only on topology, so the DuckDB
-    # oracle's integer-id replay stays bit-identical). An EMPTY
+    # Nodes are the raw source STRINGS (pagerank_py nodes must be
+    # mutually comparable: all ints or all strings; rank values depend
+    # only on topology, so the DuckDB oracle's integer-id replay stays
+    # bit-identical). An EMPTY
     # affinity graph (single source, or no token overlap between
     # sources yet — the mid-ingest finalize case) degrades to
     # all-zero weights, which is exactly what the batch stack gives

@@ -44,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import route as RT
+
 Q_RANK = 40  #: per-node rank fixed point (initial rank = 2^40)
 
 
@@ -67,42 +69,19 @@ def _require_integral(df: DataFrame, col: str, op: str) -> None:
         )
 
 
-def _driver_route_arrays(
-    e: DataFrame, cols: "list[str]", n_edges: "int | None" = None
-):
-    """Size-probe + Arrow collect for the numpy driver route (see
-    ``operators.graph_np``): at or under ``graph_np.edge_budget()``
-    the columns come back as numpy arrays and the caller runs the
-    exact fixpoint driver-side; past it (or numpy missing, or NULLs
-    in any column) returns None and the distributed loop proceeds
-    untouched. Probe and collect are ONE pass (r14 advisor/verdict
-    item): a single plain parallel Arrow collect, bounded after the
-    fact by the row budget and by Spark's own
-    ``spark.driver.maxResultSize`` abort (caught → fallback) — see
-    ``graph_np.collect_cols_bounded`` for why the former
-    ``limit(budget+1)`` probe was replaced (CollectLimit's
-    incremental partition ramp serialized the routed collect; r15
-    measured 3.08 s → 0.67 s on a 3.6M-edge lineage)."""
-    from . import graph_np
-
-    budget = graph_np.edge_budget()
-    if budget <= 0:
-        return None
-    try:
-        import numpy  # noqa: F401
-    except ImportError:  # pragma: no cover - numpy ships with pyspark
-        return None
+def _driver_route_arrays(e: DataFrame, cols: "list[str]"):
+    """The graph driver route's collect (``operators.route``): at or
+    under the ``graph`` budget the columns come back as numpy arrays
+    and the caller runs the exact fixpoint driver-side; past it (or
+    NULLs in any column) returns None and the distributed loop
+    proceeds untouched."""
     # node columns concatenated into one index universe must share a
     # dtype: the routed result declares _src's type while distributed
     # unionByName coerces to the wider one (r14 advisor item)
     if "_src" in cols and "_dst" in cols:
         if e.schema["_src"].dataType != e.schema["_dst"].dataType:
             return None
-    if n_edges is not None:
-        if n_edges > budget:
-            return None
-        return graph_np.collect_cols(e, cols)
-    return graph_np.collect_cols_bounded(e, cols, budget)
+    return RT.columns(RT.collect(e, RT.budget("graph")), cols)
 
 
 def _np_result_df(spark, fields):
@@ -255,22 +234,9 @@ def pagerank(
                 routable = False
         if routable:
             try:
-                if weight_col is None:
-                    s_a, d_a = graph_np.dedup_pairs(route[0], route[1])
-                    w_a = None
-                else:
-                    s_a, d_a, w_a = graph_np.group_pairs(
-                        route[0], route[1], route[2]
-                    )
-                    if (
-                        not weights_checked
-                        and w_a.size
-                        and int(w_a.min()) <= 0
-                    ):
-                        raise ValueError(
-                            f"pagerank: weights must be positive "
-                            f"integers, found {int(w_a.min())}"
-                        )
+                s_a, d_a, w_a = graph_np.edge_pairs(
+                    route, op=None if weights_checked else "pagerank"
+                )
                 nd, rq = graph_np.pagerank_np(
                     s_a,
                     d_a,
@@ -567,18 +533,9 @@ def label_propagation(
         from . import graph_np
 
         try:
-            if weight_col is None:
-                s_a, d_a = graph_np.dedup_pairs(route[0], route[1])
-                w_a = None
-            else:
-                s_a, d_a, w_a = graph_np.group_pairs(
-                    route[0], route[1], route[2]
-                )
-                if w_a.size and int(w_a.min()) <= 0:
-                    raise ValueError(
-                        "label_propagation: weights must be positive "
-                        f"integers, found {int(w_a.min())}"
-                    )
+            s_a, d_a, w_a = graph_np.edge_pairs(
+                route, op="label_propagation"
+            )
             nd, lab = graph_np.label_propagation_np(
                 s_a,
                 d_a,
@@ -781,21 +738,20 @@ def bfs_distances(
         from . import graph_np
 
         s_df = sources.select(F.col(node_col).alias("node")).distinct()
-        if s_df.count() <= graph_np.edge_budget():
-            s_cols = graph_np.collect_cols(s_df, ["node"])
-            if s_cols is not None:
-                from pyspark.sql import types as T
+        s_cols = RT.columns(RT.collect(s_df, RT.budget("graph")), ["node"])
+        if s_cols is not None:
+            from pyspark.sql import types as T
 
-                nd, dv = graph_np.bfs_np(
-                    route[0], route[1], s_cols[0], max_hops=max_hops
-                )
-                return _np_result_df(
-                    e.sparkSession,
-                    [
-                        ("node", e.schema["_src"].dataType, nd),
-                        ("dist", T.IntegerType(), dv.astype("int32")),
-                    ],
-                )
+            nd, dv = graph_np.bfs_np(
+                route[0], route[1], s_cols[0], max_hops=max_hops
+            )
+            return _np_result_df(
+                e.sparkSession,
+                [
+                    ("node", e.schema["_src"].dataType, nd),
+                    ("dist", T.IntegerType(), dv.astype("int32")),
+                ],
+            )
     if not edges_ready:
         # dedup + lineage-cut the edge build; edges_ready callers
         # (a deduped catalog/bucketed table) re-scan per hop instead
@@ -952,38 +908,31 @@ def shortest_paths_bounded(
         from . import graph_np
 
         s_df = sources.select(F.col(node_col).alias("node")).distinct()
-        if s_df.count() <= graph_np.edge_budget():
-            s_cols = graph_np.collect_cols(s_df, ["node"])
-            if s_cols is not None:
-                from pyspark.sql import types as T
+        s_cols = RT.columns(RT.collect(s_df, RT.budget("graph")), ["node"])
+        if s_cols is not None:
+            from pyspark.sql import types as T
 
-                try:
-                    s_a, d_a, w_a = graph_np.group_pairs(
-                        route[0], route[1], route[2], reduce="min"
-                    )
-                    if w_a.size and int(w_a.min()) <= 0:
-                        raise ValueError(
-                            "shortest_paths_bounded: weights must be "
-                            "positive integers, found "
-                            f"{int(w_a.min())}"
-                        )
-                    nd, dv = graph_np.shortest_paths_np(
-                        s_a,
-                        d_a,
-                        w_a,
-                        s_cols[0],
-                        max_hops=max_hops,
-                    )
-                except graph_np.NpOverflow:
-                    pass
-                else:
-                    return _np_result_df(
-                        raw.sparkSession,
-                        [
-                            ("node", raw.schema["_src"].dataType, nd),
-                            ("dist", T.LongType(), dv),
-                        ],
-                    )
+            try:
+                s_a, d_a, w_a = graph_np.edge_pairs(
+                    route, reduce="min", op="shortest_paths_bounded"
+                )
+                nd, dv = graph_np.shortest_paths_np(
+                    s_a,
+                    d_a,
+                    w_a,
+                    s_cols[0],
+                    max_hops=max_hops,
+                )
+            except graph_np.NpOverflow:
+                pass
+            else:
+                return _np_result_df(
+                    raw.sparkSession,
+                    [
+                        ("node", raw.schema["_src"].dataType, nd),
+                        ("dist", T.LongType(), dv),
+                    ],
+                )
     e = materialize(
         edges.groupBy(
             F.col(src).alias("_src"), F.col(dst).alias("_dst")
@@ -1095,13 +1044,7 @@ def kcore(
         from . import graph_np
 
         try:
-            if weight_col is None:
-                s_a, d_a = graph_np.dedup_pairs(route[0], route[1])
-                w_a = None
-            else:
-                s_a, d_a, w_a = graph_np.group_pairs(
-                    route[0], route[1], route[2]
-                )
+            s_a, d_a, w_a = graph_np.edge_pairs(route)
             nd, dv = graph_np.kcore_np(
                 s_a, d_a, w_a, k=k, rounds=rounds
             )
@@ -1294,9 +1237,9 @@ def pagerank_py(
     max_edges: int = 100_000,
 ) -> "dict[object, int]":
     """Exact driver-side replica of :func:`pagerank`'s integer
-    fixpoint for BOUNDED graphs — returns ``{node: rank_q}``
-    bit-identical to the distributed operator (parity-pinned in
-    ``tests/test_graph_ops.py``).
+    fixpoint for BOUNDED graphs given as ``(src, dst)`` or ``(src,
+    dst, w)`` tuples — returns ``{node: rank_q}`` bit-identical to the
+    distributed operator (parity-pinned in ``tests/test_graph_ops.py``).
 
     The curation queries rank a **|sources|-bounded** affinity graph
     (tens of nodes at ANY corpus size — the strata table, not the
@@ -1309,85 +1252,63 @@ def pagerank_py(
     belongs on the distributed operator (raise, never silently chew
     driver memory).
 
-    Semantics replicated exactly: duplicate unweighted edges count
-    once / duplicate weighted pairs sum; contributions are the trunc
-    divisions ``rank // outdeg`` (unweighted) or ``(rank·w) //
-    out_strength`` per deduplicated pair; dangling mass redistributes
-    uniformly (or over the seed set); damping, teleport and the
-    per-iteration floors match the Spark/DuckDB arithmetic
-    line-for-line (Python ``//`` on non-negative ints == trunc)."""
-    num, den = damping
-    q = rank_bits
-    pairs: dict = {}
-    weighted = False
-    unweighted = False
-    n_in = 0
-    for t in edges:
-        n_in += 1
-        if n_in > max_edges:
-            raise ValueError(
-                f"pagerank_py: more than {max_edges} edges — this "
-                "helper is for bounded (strata-sized) graphs; use the "
-                "distributed pagerank operator"
-            )
-        if len(t) == 3:
-            s, d, w = t
-            weighted = True
-            w = int(w)
-            if w <= 0:
-                raise ValueError(
-                    f"pagerank_py: weights must be positive integers, got {w}"
-                )
-            pairs[(s, d)] = pairs.get((s, d), 0) + w
-        else:
-            s, d = t
-            unweighted = True
-            pairs[(s, d)] = 1
-        if weighted and unweighted:
-            # a mixed list has no distributed counterpart (the Spark
-            # operator is all-weighted or all-unweighted) and would
-            # silently clobber summed weights with 1s here — refuse
-            raise ValueError(
-                "pagerank_py: mixed 2- and 3-tuple edges — pass an "
-                "all-weighted or all-unweighted edge list"
-            )
-    if not pairs:
+    An adapter over ``graph_np.pagerank_np``, the routed operator's
+    own twin: duplicate unweighted edges count once, duplicate
+    weighted pairs sum. Node values must be mutually comparable (all
+    integers or all strings). When int64 headroom cannot be certified
+    (N·2^rank_bits·max(2·damping numerator, max pair weight) ≥ 2^62 —
+    about 24.7k nodes at the default damping and q40) it raises the
+    same ValueError as the ``max_edges`` guard."""
+    import itertools
+
+    import numpy as np
+
+    from . import graph_np
+
+    edges = list(itertools.islice(edges, max_edges + 1))
+    if len(edges) > max_edges:
+        raise ValueError(
+            f"pagerank_py: more than {max_edges} edges — this "
+            "helper is for bounded (strata-sized) graphs; use the "
+            "distributed pagerank operator"
+        )
+    arity = {len(t) for t in edges}
+    if arity - {2, 3}:
+        raise ValueError("pagerank_py: edges must be 2- or 3-tuples")
+    if len(arity) > 1:
+        # a mixed list has no distributed counterpart (the Spark
+        # operator is all-weighted or all-unweighted) — refuse
+        raise ValueError(
+            "pagerank_py: mixed 2- and 3-tuple edges — pass an "
+            "all-weighted or all-unweighted edge list"
+        )
+    if not edges:
         raise ValueError("pagerank_py: empty graph")
-    nodes = set()
-    out: dict = {}
-    for (s, d), w in pairs.items():
-        nodes.add(s)
-        nodes.add(d)
-        out[s] = out.get(s, 0) + w
-    seeded = seeds is not None
-    if seeded:
-        seedset = {s for s in seeds if s in nodes}
-        if not seedset:
-            raise ValueError("pagerank_py: none of the seed ids occur in the graph")
-        n_seeds = len(seedset)
-    teleport = ((den - num) * (1 << q)) // den
-    rank = {
-        n: (1 << q) if (not seeded or n in seedset) else 0 for n in nodes
-    }
-    dangling = [n for n in nodes if n not in out]
-    n_nodes = len(nodes)
-    for _ in range(iters):
-        in_q = {n: 0 for n in nodes}
-        for (s, d), w in pairs.items():
-            in_q[d] += (rank[s] * w) // out[s] if weighted else rank[s] // out[s]
-        dang_q = sum(rank[n] for n in dangling)
-        nxt = {}
-        for n in nodes:
-            if dangling:
-                share = (
-                    (dang_q // n_seeds if (seeded and n in seedset) else 0)
-                    if seeded
-                    else dang_q // n_nodes
-                )
-                new_rank = (num * (in_q[n] + share)) // den
-            else:
-                new_rank = (num * in_q[n]) // den
-            tele = teleport if (not seeded or n in seedset) else 0
-            nxt[n] = tele + new_rank
-        rank = nxt
-    return rank
+    cols = [np.asarray(c) for c in zip(*edges)]
+    if len(cols) == 3:
+        cols[2] = np.asarray([int(x) for x in cols[2]], dtype=np.int64)
+        if int(cols[2].min()) <= 0:
+            raise ValueError(
+                f"pagerank_py: weights must be positive integers, got "
+                f"{int(cols[2].min())}"
+            )
+    src, dst, w = graph_np.edge_pairs(cols)
+    if seeds is not None:
+        present = set(src.tolist()) | set(dst.tolist())
+        seeds = [s for s in seeds if s in present]
+        if not seeds:
+            raise ValueError(
+                "pagerank_py: none of the seed ids occur in the graph"
+            )
+    num, den = damping
+    try:
+        nodes, rank = graph_np.pagerank_np(
+            src, dst, w, iters=iters, num=num, den=den, q=rank_bits,
+            seed_ids=seeds,
+        )
+    except graph_np.NpOverflow:
+        raise ValueError(
+            "pagerank_py: int64 headroom cannot be certified for this "
+            "graph; use the distributed pagerank operator"
+        ) from None
+    return dict(zip(nodes.tolist(), rank.tolist()))

@@ -9,11 +9,11 @@ arithmetic — the sf0.1 purchase graph (~1.2 M edges, ~16 K nodes)
 spends ~4–6 s per query on ~25 sub-second jobs whose actual integer
 work is milliseconds. The same size-aware routing precedent as
 ``pagerank_py`` (|sources|-bounded affinity walks) and
-``bpe._fit_words_py`` (vocab-budget merge loop): ONE bounded count
-probe decides; at or under the budget the collected edge list runs
-the exact fixpoint vectorized in numpy int64 on the driver; past it
-the distributed loop is untouched — at 100 TB an edge table must
-never land on the driver.
+``bpe._fit_words_py`` (vocab-budget merge loop): ONE bounded Arrow
+collect (``operators.route``) decides; at or under the budget the
+collected edge list runs the exact fixpoint vectorized in numpy int64
+on the driver; past it the distributed loop is untouched — at 100 TB
+an edge table must never land on the driver.
 
 EXACTNESS CONTRACT (parity-pinned in ``tests/test_graph_np.py``):
 - node identity is the index into the np.unique universe; np.unique
@@ -34,23 +34,7 @@ EXACTNESS CONTRACT (parity-pinned in ``tests/test_graph_np.py``):
 
 from __future__ import annotations
 
-import os
-
-#: 8M edges ≈ 200 MB collected (3 × int64 columns) — comfortable in
-#: the default 8g driver with a wide margin; numpy iteration cost at
-#: this size is tens of milliseconds per round. Graphs past this are
-#: genuinely distributed-scale and take the cluster loop.
-DEFAULT_EDGE_BUDGET = 8_000_000
-
-
-def edge_budget() -> int:
-    """Driver-route threshold (edges). Env-tunable:
-    ``SPARK_GRAFT_GRAPH_DRIVER_EDGES`` (0 disables the route — the
-    tests' lever for A/B parity, and the honest setting for clusters
-    whose driver is memory-starved)."""
-    return int(
-        os.environ.get("SPARK_GRAFT_GRAPH_DRIVER_EDGES", str(DEFAULT_EDGE_BUDGET))
-    )
+import numpy as np
 
 
 class NpOverflow(Exception):
@@ -58,69 +42,14 @@ class NpOverflow(Exception):
     callers fall back to the distributed DECIMAL(38,0) path."""
 
 
-def _np():
-    import numpy as np
-
-    return np
-
-
-def collect_cols(df, names):
-    """Collect ``names`` columns via Arrow → list of numpy arrays.
-    Returns None when any column carries NULLs (the route refuses;
-    distributed semantics own that case)."""
-    return _cols_of(df.toArrow(), names)
-
-
-def collect_cols_bounded(df, names, budget: int):
-    """Probe-and-collect in ONE pass: a single plain parallel Arrow
-    collect, guarded two ways — rows over ``budget`` return None (the
-    caller takes the distributed path), and a collect whose serialized
-    results blow past ``spark.driver.maxResultSize`` (1g default) is
-    aborted BY SPARK and caught here, so a wildly over-budget input
-    costs one partial scan and never OOMs the driver.
-
-    Why not ``limit(budget+1)``: CollectLimit executes via
-    ``executeTake``'s incremental partition ramp (1, 4, 16, ...
-    partitions per job — ``spark.sql.limit.initialNumPartitions``),
-    which serializes what should be one fully parallel pass; measured
-    3.08 s vs 0.67 s for a 3.6M-edge union-of-joins lineage (r15,
-    median-of-3), i.e. the r14 bounded probe DOUBLED the routed path
-    over even the old count+collect shape (1.41 s). Raising the
-    initial-partition count would instead let every task ship up to
-    budget rows to the driver at once — unbounded driver memory at
-    scale. The maxResultSize guard keeps the one-pass collect
-    memory-safe without either cost. Row order is whatever the
-    collect returned — every routed fixpoint normalizes on the
-    arrays (np.unique / lexsort), so order never matters."""
-    try:
-        tbl = df.toArrow()
-    except Exception as exc:  # over-size abort → distributed path
-        if "maxResultSize" in str(exc) or "bigger than" in str(exc):
-            return None
-        raise
-    if tbl.num_rows > budget:
-        return None
-    return _cols_of(tbl, names)
-
-
-def _cols_of(tbl, names):
-    out = []
-    for n in names:
-        col = tbl.column(n)
-        if col.null_count:
-            return None
-        out.append(col.to_numpy(zero_copy_only=False))
-    return out
-
-
-def _index(np, *cols):
+def _index(*cols):
     """Encode node columns into the sorted-unique universe; returns
     (nodes, [idx arrays])."""
     nodes = np.unique(np.concatenate(cols))
     return nodes, [np.searchsorted(nodes, c) for c in cols]
 
 
-def _as_i64(np, a):
+def _as_i64(a):
     return a.astype(np.int64, copy=False)
 
 
@@ -129,7 +58,6 @@ def dedup_pairs(src, dst):
     ``.distinct()`` edge normalization (order never matters to any
     fixpoint here). Works on raw node values of any comparable
     dtype."""
-    np = _np()
     order = np.lexsort((dst, src))
     s, d = src[order], dst[order]
     if s.size == 0:
@@ -145,8 +73,7 @@ def group_pairs(src, dst, w, *, reduce: str = "sum"):
     distributed ``groupBy(src, dst).agg(sum|min(w))`` normalization.
     Returns (src', dst', w') int64-exact; ``sum`` certifies headroom
     (total weight < 2^62) or raises :class:`NpOverflow`."""
-    np = _np()
-    w = _as_i64(np, w)
+    w = _as_i64(w)
     if reduce == "sum" and int(np.abs(w).sum()) >= (1 << 62):
         raise NpOverflow
     order = np.lexsort((dst, src))
@@ -167,6 +94,22 @@ def group_pairs(src, dst, w, *, reduce: str = "sum"):
     return s[new], d[new], out
 
 
+def edge_pairs(cols, *, reduce: str = "sum", op: "str | None" = None):
+    """Collected ``[src, dst]`` or ``[src, dst, w]`` columns →
+    ``(src, dst, w)``: distinct pairs (``w`` None) or per-pair
+    ``reduce``d weights — the numpy twin of the distributed edge
+    normalization. With ``op``, a non-positive weight raises that
+    operator's ValueError, as its distributed guard does."""
+    if len(cols) == 2:
+        return (*dedup_pairs(*cols), None)
+    s, d, w = group_pairs(*cols, reduce=reduce)
+    if op and w.size and int(w.min()) <= 0:
+        raise ValueError(
+            f"{op}: weights must be positive integers, found {int(w.min())}"
+        )
+    return s, d, w
+
+
 def pagerank_np(
     src,
     dst,
@@ -183,8 +126,7 @@ def pagerank_np(
     ``(nodes, rank_q)``; raises the operator's own ValueErrors for
     the shared guards and :class:`NpOverflow` when int64 headroom
     cannot be certified."""
-    np = _np()
-    nodes, (si, di) = _index(np, src, dst)
+    nodes, (si, di) = _index(src, dst)
     n = int(nodes.size)
     if n == 0:
         raise ValueError("pagerank: empty graph")
@@ -197,7 +139,7 @@ def pagerank_np(
             "graph before ranking."
         )
     if w is not None:
-        w = _as_i64(np, w)
+        w = _as_i64(w)
         outdeg = np.zeros(n, np.int64)
         np.add.at(outdeg, si, w)
         wmax = int(w.max())
@@ -208,7 +150,7 @@ def pagerank_np(
     seed_mask = None
     n_seeds = 0
     if seeded:
-        sarr = np.asarray(seed_ids, dtype=np.int64)
+        sarr = np.asarray(seed_ids)
         sidx = np.searchsorted(nodes, sarr)
         inb = sidx < n
         ok = np.zeros(sarr.size, dtype=bool)
@@ -261,8 +203,7 @@ def pagerank_np(
 def connected_components_np(src, dst, *, iters: int):
     """Min-label fixpoint on the index universe (order-isomorphic to
     node values, so MIN commutes with the encoding)."""
-    np = _np()
-    nodes, (si, di) = _index(np, src, dst)
+    nodes, (si, di) = _index(src, dst)
     n = int(nodes.size)
     labels = np.arange(n, dtype=np.int64)
     for _ in range(iters):
@@ -279,13 +220,12 @@ def label_propagation_np(
     max (weighted) vote among neighbors + itself, ties to the smallest
     label. Votes aggregated by (node, label) key; winner by
     lexsort(node asc, vote desc, label asc)."""
-    np = _np()
-    nodes, (si, di) = _index(np, src, dst)
+    nodes, (si, di) = _index(src, dst)
     n = int(nodes.size)
     if n == 0:
         raise ValueError("label_propagation: empty graph")
     wv = (
-        _as_i64(np, w)
+        _as_i64(w)
         if w is not None
         else np.ones(len(si), np.int64)
     )
@@ -315,8 +255,7 @@ def label_propagation_np(
 
 def bfs_np(src, dst, source_nodes, *, max_hops: int):
     """Frontier BFS; returns (reached_nodes, dist int64)."""
-    np = _np()
-    nodes, (si, di, so) = _index(np, src, dst, source_nodes)
+    nodes, (si, di, so) = _index(src, dst, source_nodes)
     n = int(nodes.size)
     dist = np.full(n, -1, np.int64)
     dist[so] = 0
@@ -333,10 +272,9 @@ def shortest_paths_np(src, dst, w, source_nodes, *, max_hops: int):
     """Bounded min-plus relaxation. The reachable universe matches the
     distributed full-join accumulation: sources ∪ every node a
     relaxation ever delivered to."""
-    np = _np()
-    nodes, (si, di, so) = _index(np, src, dst, source_nodes)
+    nodes, (si, di, so) = _index(src, dst, source_nodes)
     n = int(nodes.size)
-    w = _as_i64(np, w)
+    w = _as_i64(w)
     if (max_hops + 1) * int(w.max() if w.size else 0) >= (1 << 61):
         raise NpOverflow
     INF = np.int64(1 << 62)
@@ -359,10 +297,9 @@ def kcore_np(src, dst, w, *, k: int, rounds: int):
     """Iterated under-threshold peeling with the same monotone
     early-exit as the distributed loop; returns (node, deg/strength)
     over the surviving subgraph."""
-    np = _np()
-    nodes, (si, di) = _index(np, src, dst)
+    nodes, (si, di) = _index(src, dst)
     n = int(nodes.size)
-    wv = _as_i64(np, w) if w is not None else None
+    wv = _as_i64(w) if w is not None else None
     if wv is not None and int(wv.sum()) >= (1 << 62):
         raise NpOverflow
     mask = np.ones(len(si), dtype=bool)
@@ -394,8 +331,7 @@ def coreness_np(src, dst, *, k_max: int, rounds: int):
     shrinking edge set, shared n_edges across k levels, same
     early-exit). Returns (node, coreness) over the ORIGINAL src
     universe."""
-    np = _np()
-    nodes, (si, di) = _index(np, src, dst)
+    nodes, (si, di) = _index(src, dst)
     n = int(nodes.size)
     orig_src = np.zeros(n, dtype=bool)
     orig_src[si] = True
@@ -429,7 +365,6 @@ def shared_item_pairs_np(item, member, *, min_shared: int):
     ``(a, b)`` member-value arrays with ``a < b``; raises
     :class:`NpOverflow` past the pair-volume budget (the same
     quadratic-fan-out guard as the wedge route)."""
-    np = _np()
     items = np.unique(item)
     members = np.unique(member)
     n_i, n_m = int(items.size), int(members.size)
@@ -473,8 +408,7 @@ def triangle_counts_np(src, dst):
     """Degree-ordered wedge enumeration + closing-edge membership —
     the exact distributed plan, vectorized. Input edge list must be
     deduplicated, self-loop-free, both directions present."""
-    np = _np()
-    nodes, (si, di) = _index(np, src, dst)
+    nodes, (si, di) = _index(src, dst)
     n = int(nodes.size)
     if n * n >= (1 << 62):
         raise NpOverflow

@@ -74,6 +74,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import route as RT
+
 
 def _is_float(dt: T.DataType) -> bool:
     return isinstance(dt, (T.FloatType, T.DoubleType))
@@ -405,37 +407,23 @@ def kth_smallest_by(
             vals.unpersist(blocking=False)
 
 
-def _driver_rows_budget() -> int:
-    """Row threshold for the numpy driver route: at or under it the
-    whole (group, value[, weight]) projection collects via Arrow and
-    every requested rank resolves in ONE job (np.sort per group)
-    instead of the descent's stats/histogram/resolve job chain. The
-    probe is free — per-group row counts are already in the stats the
-    descent needs anyway. 4M rows ≈ 100 MB collected; past it (or for
-    exotic value types / NULL group keys) the bucketed descent runs
-    untouched — at 100 TB a corpus-sized value column must never land
-    on the driver. Env-tunable; 0 disables (the tests' A/B lever)."""
-    import os
-
-    return int(
-        os.environ.get("SPARK_GRAFT_ORDERSTATS_DRIVER_ROWS", "4000000")
-    )
-
-
-def _resolve_driver_np(vals, gcols, want, weighted):
+def _resolve_driver_np(vals, gcols, want, weighted, budget):
     """Exact per-group k-th smallest on the collected projection —
     bit-identical to the descent's resolution: unweighted rank k is
     the k-th value in ascending order (1-based); weighted rank k is
     the smallest value whose cumulative weight reaches k (weights
     summed per distinct value, so tie order is immaterial). Returns
     ``{group: {k: value}}`` with plain Python scalars, or None when
-    the route cannot certify exactness (numpy missing, NULL group
-    keys)."""
-    try:
-        import numpy as np
-    except ImportError:  # pragma: no cover
+    the route collect refuses (``operators.route``: the row count
+    does not bound bytes — string group keys can pass Spark's
+    result-size cap) or the route cannot certify exactness (NULL
+    group keys)."""
+    import numpy as np
+
+    tbl = RT.collect(vals, budget)
+    if tbl is None:
         return None
-    tbl = vals.toArrow().combine_chunks()
+    tbl = tbl.combine_chunks()
     for g in gcols:
         if tbl.column(g).null_count:
             return None  # NULL group keys: descent owns that grouping
@@ -613,12 +601,13 @@ def _descend(
             T.DoubleType,
         ),
     ):
+        budget = RT.budget("orderstats")
         total_rows = sum(nr for (_, _, _, nr) in gstats.values())
-        if 0 < total_rows <= _driver_rows_budget():
+        if 0 < total_rows <= budget:
             want: dict[tuple, list] = {}
             for g, k, _, _, _, _, _ in pending:
                 want.setdefault(g, []).append(k)
-            routed = _resolve_driver_np(vals, gcols, want, weighted)
+            routed = _resolve_driver_np(vals, gcols, want, weighted, budget)
             # completeness gate (r14 advisor): the routed dict's keys
             # come from Arrow to_pylist() while want's come from
             # collected Rows — representations can diverge (tz-aware

@@ -44,10 +44,12 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from . import intlin as IL
+from . import route as RT
 
 _Q20 = 1 << IL.Q_COORD
 _Q35 = 1 << (IL.Q_COORD + IL.Q_VEC)
@@ -65,7 +67,6 @@ def int_moments(
     max|xi|² must stay under 2^63 — raise with remediation instead of
     wrapping); the driver reduces the ≤ num_partitions partials in
     unbounded Python ints."""
-    import numpy as np
 
     def partials(it: Iterator) -> Iterator:
         import pandas as pd
@@ -263,17 +264,9 @@ def _pca_prefilter_np(
     desc / neighbor asc), exact full-vector cosine rerank of exactly
     that shortlist, top-``k``. Same guards and fallback conditions as
     ``similarity._cosine_topk_np``."""
-    from .similarity import _ann_driver_rows, _fold_dot_rows, _fold_norms
-
-    budget = _ann_driver_rows()
-    if budget <= 0:
-        return None
-    try:
-        import numpy as np
-    except ImportError:  # pragma: no cover
-        return None
-    import pyarrow.compute as pc
     from pyspark.sql import types as T
+
+    from .similarity import _fold_dot_rows, _fold_norms
 
     id_t = emb.schema[id_col].dataType
     if not isinstance(
@@ -287,40 +280,26 @@ def _pca_prefilter_np(
         F.array(*pca_project_cols(model, vec_col)).alias("_pc"),
         flag.alias("_isq"),
     )
-    try:
-        tbl = sel.toArrow()
-    except Exception as exc:  # over-size abort → distributed path
-        if "maxResultSize" in str(exc) or "bigger than" in str(exc):
-            return None
-        raise
-    if tbl.num_rows > budget or tbl.num_rows == 0:
+    tbl = RT.collect(sel, RT.budget("ann"))
+    if tbl is None or tbl.num_rows == 0:
         return None
-    for name in (id_col, vec_col, "_pc", "_isq"):
-        if tbl.column(name).null_count:
-            return None
+    got = RT.columns(tbl, [id_col, "_isq"])
+    if got is None:
+        return None
 
     def _mat(col):
-        flat = pc.list_flatten(col)
-        if flat.null_count:
+        m = RT.vectors(col)
+        if m is None or m.shape[1] == 0 or not np.all(np.isfinite(m)):
             return None
-        lens = pc.list_value_length(col).to_numpy(zero_copy_only=False)
-        if int(lens.min()) != int(lens.max()) or int(lens[0]) == 0:
-            return None
-        m = (
-            flat.to_numpy(zero_copy_only=False)
-            .astype(np.float64)
-            .reshape(tbl.num_rows, int(lens[0]))
-        )
-        return m if np.all(np.isfinite(m)) else None
+        return m
 
     X = _mat(tbl.column(vec_col))
     P = _mat(tbl.column("_pc"))
     if X is None or P is None:
         return None
-    ids = tbl.column(id_col).to_numpy(zero_copy_only=False)
-    isq = tbl.column("_isq").to_numpy(zero_copy_only=False).astype(bool)
-    xn = _fold_norms(np, X)
-    pn = _fold_norms(np, P)
+    ids, isq = got[0], got[1].astype(bool)
+    xn = _fold_norms(X)
+    pn = _fold_norms(P)
     if (
         not np.all(np.isfinite(xn))
         or not np.all(np.isfinite(pn))
@@ -332,7 +311,7 @@ def _pca_prefilter_np(
     q_idx = np.nonzero(isq)[0]
     out_q, out_n, out_c, out_r = [], [], [], []
     if q_idx.size:
-        coarse = _fold_dot_rows(np, P[q_idx], P) / (
+        coarse = _fold_dot_rows(P[q_idx], P) / (
             pn[q_idx][:, None] * pn[None, :]
         )
         for r, qg in enumerate(q_idx):
@@ -343,7 +322,7 @@ def _pca_prefilter_np(
             short = np.nonzero(mask)[0][
                 np.lexsort((cand_id, -cand_cos))[:shortlist]
             ]
-            ex = _fold_dot_rows(np, X[qg : qg + 1], X[short])[0] / (
+            ex = _fold_dot_rows(X[qg : qg + 1], X[short])[0] / (
                 xn[qg] * xn[short]
             )
             order = np.lexsort((ids[short], -ex))[:k]

@@ -22,10 +22,12 @@ deterministic under identical operation order.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import route as RT
 from .util import spread
 
 
@@ -43,7 +45,7 @@ def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     return spread(df).withColumn("_norm", norm_fold(F.col(vec_col)))
 
 
-def _fold_dot_rows(np, Q, C):
+def _fold_dot_rows(Q, C):
     """Pairwise dot products replicating the JVM ``dot_fold`` op
     sequence bit-for-bit: per-element double products first, then a
     LEFT fold of double additions over dimensions. numpy's matmul /
@@ -57,7 +59,7 @@ def _fold_dot_rows(np, Q, C):
     return acc
 
 
-def _fold_norms(np, X):
+def _fold_norms(X):
     """Row norms via the same sequential double fold + one sqrt —
     the exact ``norm_fold`` sequence."""
     P = X * X
@@ -82,21 +84,12 @@ def _cosine_topk_np(
     SPARK, so the query subset is definitionally identical — then the
     exact IEEE fold arithmetic and the (cosine desc, neighbor asc)
     row_number cut in numpy. Returns None (distributed path) when:
-    budget disabled / exceeded, collect aborted by maxResultSize,
-    NULLs anywhere, ragged or non-finite vectors, zero norms (their
+    the ``ann`` route collect refuses (``operators.route``), NULLs
+    anywhere, ragged or non-finite vectors, zero norms (their
     division semantics belong to the distributed plan), non-integral
     id columns, or an over-``max_query_rows`` query set (the
     distributed guard owns that error)."""
-    budget = _ann_driver_rows()
-    if budget <= 0:
-        return None
-    try:
-        import numpy as np
-    except ImportError:  # pragma: no cover
-        return None
-    import pyarrow.compute as pc
     import pyarrow.types as pat
-    from pyspark.sql import types as T
 
     id_t = emb.schema[id_col].dataType
     if not isinstance(
@@ -105,43 +98,26 @@ def _cosine_topk_np(
         return None
     cols = [id_col, vec_col] + ([cell_col] if cell_col else [])
     flag = query_pred if query_pred is not None else F.lit(True)
-    try:
-        tbl = emb.select(*cols, flag.alias("_isq")).toArrow()
-    except Exception as exc:  # over-size abort → distributed path
-        if "maxResultSize" in str(exc) or "bigger than" in str(exc):
-            return None
-        raise
-    if tbl.num_rows > budget or tbl.num_rows == 0:
-        return None
-    for name in cols + ["_isq"]:
-        if tbl.column(name).null_count:
-            return None
-    vec_a = tbl.column(vec_col)
-    flat = pc.list_flatten(vec_a)
-    if flat.null_count:
-        return None
-    lens = pc.list_value_length(vec_a).to_numpy(zero_copy_only=False)
-    if int(lens.min()) != int(lens.max()) or int(lens[0]) == 0:
-        return None
-    ids = tbl.column(id_col).to_numpy(zero_copy_only=False)
-    X = (
-        flat.to_numpy(zero_copy_only=False)
-        .astype(np.float64)
-        .reshape(len(ids), int(lens[0]))
+    tbl = RT.collect(
+        emb.select(*cols, flag.alias("_isq")), RT.budget("ann")
     )
+    if tbl is None or tbl.num_rows == 0:
+        return None
+    got = RT.columns(tbl, [id_col, "_isq"] + cols[2:])
+    X = RT.vectors(tbl.column(vec_col))
+    if got is None or X is None or X.shape[1] == 0:
+        return None
     if not np.all(np.isfinite(X)):
         return None
-    isq = tbl.column("_isq").to_numpy(zero_copy_only=False).astype(bool)
+    ids, isq = got[0], got[1].astype(bool)
     if max_query_rows is not None and int(isq.sum()) > max_query_rows:
         return None  # the distributed guard raises the canonical error
     if cell_col:
-        cell_a = tbl.column(cell_col)
-        if not (
-            pat.is_integer(cell_a.type) or pat.is_string(cell_a.type)
-        ):
+        cell_t = tbl.column(cell_col).type
+        if not (pat.is_integer(cell_t) or pat.is_string(cell_t)):
             return None
-        cells = cell_a.to_numpy(zero_copy_only=False)
-    norms = _fold_norms(np, X)
+        cells = got[2]
+    norms = _fold_norms(X)
     if not np.all(np.isfinite(norms)) or np.any(norms == 0.0):
         return None  # inf/NaN ordering belongs to the distributed plan
 
@@ -151,7 +127,7 @@ def _cosine_topk_np(
         """Top-k per query over one candidate block, exact tie order."""
         if len(qi_idx) == 0 or len(ci_idx) == 0:
             return
-        dots = _fold_dot_rows(np, X[qi_idx], X[ci_idx])
+        dots = _fold_dot_rows(X[qi_idx], X[ci_idx])
         cos = dots / (norms[qi_idx][:, None] * norms[ci_idx][None, :])
         cid = ids[ci_idx]
         for r, qg in enumerate(qi_idx):
@@ -221,8 +197,8 @@ def cosine_topk(
     """
     # bounded inputs route through the exact numpy twin (brute and
     # cell modes; multi-probe keeps the distributed plan): one Arrow
-    # collect + the same IEEE fold arithmetic, under
-    # SPARK_GRAFT_ANN_DRIVER_ROWS like every ANN route here
+    # collect + the same IEEE fold arithmetic, under the ``ann``
+    # route budget like every ANN route here
     if probe_cells is None:
         routed = _cosine_topk_np(
             emb, k, query_pred, id_col, vec_col, cell_col, max_query_rows
@@ -417,72 +393,25 @@ def _audit_q40_sum(rows, where: str) -> None:
             )
 
 
-def _ann_driver_rows() -> int:
-    """Row budget for the ANN driver routes (kmeans_fit /
-    kcenter_greedy): at or under it the (id, vector) projection
-    collects once via Arrow and the iteration loop runs vectorized on
-    the driver — replacing iters × (Arrow assign pass + mean collect)
-    jobs of fixed latency. 500k × 64-dim float64 ≈ 256 MB; past it
-    (or NULLs) the distributed loop is untouched. Env-tunable
-    ``SPARK_GRAFT_ANN_DRIVER_ROWS``; 0 disables (the tests' A/B
-    lever)."""
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_ANN_DRIVER_ROWS", "500000"))
-
-
 def _collect_id_vecs(emb: DataFrame, id_col: str, vec_col: str):
-    """Size-probed Arrow collect of (id, vector) → (ids int64 array,
-    vecs float64 matrix) sorted by id ascending, or None (over
-    budget / NULLs at any nesting level / ragged vectors / numpy
-    missing). Probe and collect are ONE pass (r14 advisor/verdict
-    item): a single plain parallel Arrow collect, bounded after the
-    fact by the row budget and by Spark's ``maxResultSize`` abort
-    (caught → fallback) — the former ``limit(budget+1)`` probe
-    serialized the collect through CollectLimit's incremental
-    partition ramp (see ``graph_np.collect_cols_bounded``).
-    Child-level NULLs (NaN under np.asarray — argmax-divergent from
-    the distributed null ordering) and ragged lengths fall back
-    instead of silently diverging or raising (r14 advisor item)."""
-    budget = _ann_driver_rows()
-    if budget <= 0:
-        return None
-    try:
-        import numpy as np
-    except ImportError:  # pragma: no cover
-        return None
-    import pyarrow.compute as pc
-
-    try:
-        tbl = emb.select(id_col, vec_col).toArrow()
-    except Exception as exc:  # over-size abort → distributed path
-        if "maxResultSize" in str(exc) or "bigger than" in str(exc):
-            return None
-        raise
-    if tbl.num_rows > budget:
-        return None
-    if tbl.column(id_col).null_count or tbl.column(vec_col).null_count:
-        return None
-    ids = tbl.column(id_col).to_numpy(zero_copy_only=False)
-    if len(ids) == 0:
+    """The ANN driver route's collect (``operators.route``, ``ann``
+    budget) of (id, vector) → (ids int64 array, vecs float64 matrix)
+    sorted by id ascending, or None (over budget / NULLs at any
+    nesting level / ragged vectors / empty input). At or under the
+    budget the kmeans_fit / kcenter_greedy iteration loop runs
+    vectorized on the driver."""
+    tbl = RT.collect(emb.select(id_col, vec_col), RT.budget("ann"))
+    got = RT.columns(tbl, [id_col])
+    if got is None or len(got[0]) == 0:
         return None  # empty input: distributed error paths own it
-    vec_a = tbl.column(vec_col)
-    flat = pc.list_flatten(vec_a)
-    if flat.null_count:
-        return None  # NULL vector elements: distributed paths own them
-    lens = pc.list_value_length(vec_a).to_numpy(zero_copy_only=False)
-    if int(lens.min()) != int(lens.max()):
-        return None  # ragged vectors: fall back, don't raise
-    vecs = (
-        flat.to_numpy(zero_copy_only=False)
-        .astype(np.float64)
-        .reshape(len(ids), int(lens[0]))
-    )
-    order = np.argsort(ids, kind="stable")
-    return ids[order], vecs[order]
+    vecs = RT.vectors(tbl.column(vec_col))
+    if vecs is None:
+        return None
+    order = np.argsort(got[0], kind="stable")
+    return got[0][order], vecs[order]
 
 
-def _np_assign_codes(vecs, cents, np):
+def _np_assign_codes(vecs, cents):
     """The numpy twin of one `_pq_assign` single-subspace pass: exact
     int64 squared L2 over q20-quantized coordinates, first-min
     tie-break. Chunked so the n × k × dim diff tensor stays bounded."""
@@ -499,7 +428,7 @@ def _np_assign_codes(vecs, cents, np):
     return q, codes
 
 
-def _kmeans_np(ids, vecs, k, iters, np):
+def _kmeans_np(ids, vecs, k, iters):
     """Exact driver replica of the distributed Lloyd loop below —
     same deterministic seeding (k lowest ids), same q20 integer
     argmin assignment, same q40 fixed-point means with the identical
@@ -508,7 +437,7 @@ def _kmeans_np(ids, vecs, k, iters, np):
     cents = [[float(x) for x in vecs[i]] for i in range(min(k, len(ids)))]
     codes = None
     for _ in range(iters):
-        _, codes = _np_assign_codes(vecs, cents, np)
+        _, codes = _np_assign_codes(vecs, cents)
         s40 = np.floor(vecs * float(1 << 40)).astype(np.int64)
         kk = len(cents)
         sums = np.zeros((kk, dim), np.int64)
@@ -538,7 +467,7 @@ def _kmeans_np(ids, vecs, k, iters, np):
         if new_cents == cents:
             break
         cents = new_cents
-    _, codes = _np_assign_codes(vecs, cents, np)
+    _, codes = _np_assign_codes(vecs, cents)
     return cents, codes
 
 
@@ -575,10 +504,8 @@ def kmeans_fit(
     # untouched.
     route = _collect_id_vecs(emb, id_col, vec_col)
     if route is not None:
-        import numpy as np
-
         ids_a, vecs_a = route
-        cents, codes = _kmeans_np(ids_a, vecs_a, k, iters, np)
+        cents, codes = _kmeans_np(ids_a, vecs_a, k, iters)
         import pandas as pd
 
         from pyspark.sql import types as T
@@ -826,7 +753,6 @@ def cosine_topk_vectorized(
     IVF index with ``n_cells`` cells is built first. Checked rows-only
     (BLAS sum order ≠ fold).
     """
-    import numpy as np
     import pandas as pd
 
     if cell_col is None:
@@ -925,7 +851,6 @@ def dot_topk_vectorized(
     Returns ``(query_id, neighbor_id, score, rank)``; ``score`` is
     the raw int64 fixed-point dot product (monotone in the double
     dot product up to quantization)."""
-    import numpy as np
     import pandas as pd
 
     q = emb.where(query_pred) if query_pred is not None else emb
@@ -1033,7 +958,6 @@ def semdedup(
     memory is the documented m² constraint, exactly the neardup
     blocked-GEMM budget. No driver collect of data rows.
     """
-    import numpy as np
     import pandas as pd
 
     centroids, assignments = kmeans_fit(emb, n_cells, iters, id_col, vec_col)
@@ -1136,7 +1060,6 @@ def semdedup_exact(
 
     Returns df[id_col, cell, keep] for every input row.
     """
-    import numpy as np
     import pandas as pd
 
     p_num, q_den = threshold
@@ -1299,7 +1222,6 @@ def _pq_assign(
     list_position replay all produce the same code — so the fast
     evaluation is free (r8: replaced m × ksub interpreted HOF folds
     per row, ~4× of the bench entry)."""
-    import numpy as np
     import pandas as pd
 
     m = len(books)
@@ -1379,7 +1301,6 @@ def pq_topk_adc(
     cluster scale, replace the hash chunks with IVF probe cells to
     skip chunks entirely.
     """
-    import numpy as np
     import pandas as pd
     from pyspark.sql.window import Window
 
@@ -1560,8 +1481,6 @@ def kcenter_greedy(
     # the distributed (desc _mind, asc _id) tie-break.
     route = _collect_id_vecs(df, id_col, vec_col)
     if route is not None:
-        import numpy as np
-
         ids_a, vecs_a = route
         q = np.floor(vecs_a * float(1 << scale_bits)).astype(np.int64)
         chosen = [(0, int(ids_a[0]), 0)]

@@ -1,7 +1,7 @@
 """A/B parity for the ANN driver routes (kmeans_fit, kcenter_greedy):
 routed (one Arrow collect + numpy loop) and distributed paths must
 return IDENTICAL centroids/assignments/selections. Toggled via
-SPARK_GRAFT_ANN_DRIVER_ROWS."""
+SPARK_GRAFT_DRIVER_ROUTES."""
 
 import os
 
@@ -18,15 +18,12 @@ def spark():
 
 
 def _both(fn):
-    os.environ["SPARK_GRAFT_ANN_DRIVER_ROWS"] = "0"
+    os.environ["SPARK_GRAFT_DRIVER_ROUTES"] = "0"
     try:
         dist = fn()
     finally:
-        os.environ["SPARK_GRAFT_ANN_DRIVER_ROWS"] = "100000000"
-    try:
-        routed = fn()
-    finally:
-        del os.environ["SPARK_GRAFT_ANN_DRIVER_ROWS"]
+        del os.environ["SPARK_GRAFT_DRIVER_ROUTES"]
+    routed = fn()
     return dist, routed
 
 
@@ -158,13 +155,13 @@ def test_cosine_topk_zero_norm_falls_back(spark):
     def run():
         return sorted(map(str, SIM.cosine_topk(df, k=2).collect()))
 
-    for mode in ("0", "100000000"):
-        os.environ["SPARK_GRAFT_ANN_DRIVER_ROWS"] = mode
+    for mode in ("0", "1"):
+        os.environ["SPARK_GRAFT_DRIVER_ROUTES"] = mode
         try:
             with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
                 run()
         finally:
-            del os.environ["SPARK_GRAFT_ANN_DRIVER_ROWS"]
+            del os.environ["SPARK_GRAFT_DRIVER_ROUTES"]
 
 
 def test_pca_prefilter_parity(spark):

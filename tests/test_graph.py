@@ -450,7 +450,7 @@ def test_pagerank_unpersists_edge_cache(spark, monkeypatch):
     DataFrame itself and assert its cache entry is gone."""
     # the persist/unpersist discipline under test is the DISTRIBUTED
     # shuffle regime — disable the numpy driver route
-    monkeypatch.setenv("SPARK_GRAFT_GRAPH_DRIVER_EDGES", "0")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_ROUTES", "0")
     e = spark.createDataFrame(EDGES, "src long, dst long").distinct()
     # patch the CONCRETE class (pyspark 4's sessions hand out
     # sql.classic DataFrames that override persist; patching the

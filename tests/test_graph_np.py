@@ -1,7 +1,7 @@
 """Parity pins for the numpy driver route (operators.graph_np): every
 routed operator must return BIT-IDENTICAL rows to the distributed
 fixpoint on the same graph. The route is toggled via
-SPARK_GRAFT_GRAPH_DRIVER_EDGES (0 = distributed, large = routed)."""
+SPARK_GRAFT_DRIVER_ROUTES (0 = distributed, unset = routed)."""
 
 import os
 
@@ -22,15 +22,12 @@ def spark():
 def _both(monkeypatch_env, fn):
     """Run fn() with the route disabled and enabled; return both
     sorted row lists."""
-    os.environ["SPARK_GRAFT_GRAPH_DRIVER_EDGES"] = "0"
+    os.environ["SPARK_GRAFT_DRIVER_ROUTES"] = "0"
     try:
         dist = sorted(map(tuple, fn().collect()))
     finally:
-        os.environ["SPARK_GRAFT_GRAPH_DRIVER_EDGES"] = "100000000"
-    try:
-        routed = sorted(map(tuple, fn().collect()))
-    finally:
-        del os.environ["SPARK_GRAFT_GRAPH_DRIVER_EDGES"]
+        del os.environ["SPARK_GRAFT_DRIVER_ROUTES"]
+    routed = sorted(map(tuple, fn().collect()))
     return dist, routed
 
 
@@ -195,12 +192,13 @@ def test_triangles_parity(spark):
 
 
 def test_budget_zero_disables_route(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_GRAPH_DRIVER_EDGES", "0")
-    from databridge_etl_tools_spark.operators import graph_np
+    from databridge_etl_tools_spark.operators import route
 
-    assert graph_np.edge_budget() == 0
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_ROUTES", "0")
+    assert all(route.budget(name) == 0 for name in route.BUDGETS)
     # over-budget graphs must take the distributed loop and still work
-    monkeypatch.setenv("SPARK_GRAFT_GRAPH_DRIVER_EDGES", "2")
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_ROUTES")
+    monkeypatch.setitem(route.BUDGETS, "graph", 2)
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1)], "src long, dst long"
     )
@@ -213,11 +211,13 @@ def test_bounded_collect_maxresultsize_falls_back(spark):
     driver.maxResultSize abort as an over-budget signal (return None
     → distributed path), not an error — that abort is the memory
     guard that replaced the CollectLimit probe (r15)."""
-    from databridge_etl_tools_spark.operators import graph_np
+    from databridge_etl_tools_spark.operators import route
 
     df = spark.createDataFrame([(1, 2)], "src long, dst long")
 
     class _Boom:
+        sparkSession = spark
+
         def select(self, *a):
             return self
 
@@ -227,12 +227,58 @@ def test_bounded_collect_maxresultsize_falls_back(spark):
                 "MiB) is bigger than spark.driver.maxResultSize"
             )
 
-    assert graph_np.collect_cols_bounded(_Boom(), ["src"], 10) is None
+    assert route.collect(_Boom(), 10) is None
     # a genuine over-budget row count still falls back post-collect
-    assert graph_np.collect_cols_bounded(df, ["src", "dst"], 0) is None
+    df2 = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    assert route.collect(df2, 1) is None
+    # a zero budget refuses before collecting
+    assert route.collect(df, 0) is None
     # and an in-budget collect routes
-    got = graph_np.collect_cols_bounded(df, ["src", "dst"], 10)
+    got = route.columns(route.collect(df, 10), ["src", "dst"])
     assert got is not None and list(got[0]) == [1]
+
+
+def test_maxresultsize_zero_refuses_route(spark, monkeypatch):
+    """Spark reads spark.driver.maxResultSize=0 as "unlimited", which
+    removes the collect's only memory guard: the route must refuse
+    BEFORE collecting (no toArrow at all) and the distributed loop
+    must answer with the same ranks."""
+    from databridge_etl_tools_spark.operators import route
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (3, 4)], "src long, dst long"
+    )
+    want = sorted(map(tuple, G.pagerank(edges, iters=3).collect()))
+    calls = []
+    orig = type(edges).toArrow
+
+    def _spy(self):
+        calls.append(1)
+        return orig(self)
+
+    monkeypatch.setattr(type(edges), "toArrow", _spy)
+    conf = spark.sparkContext._jsc.sc().conf()
+    key = "spark.driver.maxResultSize"
+    old = conf.get(key) if conf.contains(key) else None
+    conf.set(key, "0")
+    try:
+        assert route.collect(edges, 10) is None
+        got = sorted(map(tuple, G.pagerank(edges, iters=3).collect()))
+    finally:
+        if old is None:
+            conf.remove(key)
+        else:
+            conf.set(key, old)
+    assert calls == []
+    assert got == want
+
+
+def test_pagerank_py_headroom_refusal_is_value_error():
+    """pagerank_py refuses a graph whose int64 headroom the numpy twin
+    cannot certify with the same ValueError as its max_edges guard
+    (at q58, 85·2·2^58 ≥ 2^62 already for one node)."""
+    with pytest.raises(ValueError, match="distributed pagerank"):
+        G.pagerank_py([(1, 2), (2, 1)], rank_bits=58)
 
 
 def test_shared_item_pairs_parity(spark):

@@ -1,6 +1,6 @@
 """A/B parity for the orderstats numpy driver route: routed (driver
 np.sort) and descent (bucketed selection) must return IDENTICAL
-values/counts. Toggled via SPARK_GRAFT_ORDERSTATS_DRIVER_ROWS."""
+values/counts. Toggled via SPARK_GRAFT_DRIVER_ROUTES."""
 
 import os
 import random
@@ -23,15 +23,12 @@ def spark():
 
 
 def _both(fn):
-    os.environ["SPARK_GRAFT_ORDERSTATS_DRIVER_ROWS"] = "0"
+    os.environ["SPARK_GRAFT_DRIVER_ROUTES"] = "0"
     try:
         descent = fn()
     finally:
-        os.environ["SPARK_GRAFT_ORDERSTATS_DRIVER_ROWS"] = "100000000"
-    try:
-        routed = fn()
-    finally:
-        del os.environ["SPARK_GRAFT_ORDERSTATS_DRIVER_ROWS"]
+        del os.environ["SPARK_GRAFT_DRIVER_ROUTES"]
+    routed = fn()
     return descent, routed
 
 
@@ -73,6 +70,35 @@ def test_kth_smallest_by_weighted_parity(spark):
         )
     )
     assert d == r
+
+
+def test_driver_route_abort_takes_descent(spark, monkeypatch):
+    """The route's row-count probe does not bound bytes (string group
+    keys can pass spark.driver.maxResultSize): a collect that Spark
+    aborts on that limit must fall back to the descent and still
+    return the right ranks, not raise."""
+    df = _data(spark, seed=5)
+
+    def run():
+        return kth_smallest_by(
+            df, "g", "v", lambda n: {1, (n + 1) // 2, n}
+        )
+
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_ROUTES", "0")
+    want = run()
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_ROUTES")
+    calls = []
+
+    def _boom(self):
+        calls.append(1)
+        raise Exception(
+            "Total size of serialized results of 3 tasks (1126.0 "
+            "MiB) is bigger than spark.driver.maxResultSize"
+        )
+
+    monkeypatch.setattr(type(df), "toArrow", _boom)
+    assert run() == want
+    assert calls  # the route tried its collect before the descent
 
 
 def test_exact_median_by_parity(spark):

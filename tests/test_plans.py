@@ -237,7 +237,7 @@ def test_pagerank_contrib_join_broadcasts_below_node_budget(spark, monkeypatch):
     uncut plan (materialize strategy 'none' keeps the iteration
     lineage visible)."""
     # pin the DISTRIBUTED plan shape: disable the numpy driver route
-    monkeypatch.setenv("SPARK_GRAFT_GRAPH_DRIVER_EDGES", "0")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_ROUTES", "0")
     from databridge_etl_tools_spark.operators.graph import pagerank
     from databridge_etl_tools_spark.operators.materialize import strategy
 
@@ -259,7 +259,7 @@ def test_bfs_expands_frontier_delta_only(spark, monkeypatch):
     hop-2 frontier filter (hop 1's folds away against the literal
     source distance)."""
     # pin the DISTRIBUTED plan shape: disable the numpy driver route
-    monkeypatch.setenv("SPARK_GRAFT_GRAPH_DRIVER_EDGES", "0")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_ROUTES", "0")
     import re
 
     from databridge_etl_tools_spark.operators.graph import bfs_distances
@@ -368,7 +368,7 @@ def test_minplus_round_costs_stay_long(spark, monkeypatch):
     full-outer merge, costs exact int64 end-to-end (no doubles in the
     distance arithmetic), no single-partition exchange."""
     # pin the DISTRIBUTED plan shape: disable the numpy driver route
-    monkeypatch.setenv("SPARK_GRAFT_GRAPH_DRIVER_EDGES", "0")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_ROUTES", "0")
     from pyspark.sql import functions as F
 
     from databridge_etl_tools_spark.operators.graph import (
@@ -395,7 +395,7 @@ def test_weighted_lpa_argmax_window_partitions_by_node(spark, monkeypatch):
     (≤ degree+1 rows per partition) with the exact decimal weight
     sum — never a global window, never a double sum."""
     # pin the DISTRIBUTED plan shape: disable the numpy driver route
-    monkeypatch.setenv("SPARK_GRAFT_GRAPH_DRIVER_EDGES", "0")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_ROUTES", "0")
     from pyspark.sql import functions as F
 
     from databridge_etl_tools_spark.operators.graph import label_propagation
